@@ -51,7 +51,7 @@ object Coloring {
     }
 
     val strategy = opts.get("strategy") match {
-      case Some("greedy") => Strategy.GreedyAgg
+      case Some("greedy") => Strategy.GreedyRdd
       case Some("graphx") => Strategy.GraphX
       case _ => Strategy.Jp
     }

@@ -10,32 +10,31 @@ import org.apache.spark.storage.StorageLevel
   * driver loop over declarative DataFrame rounds (SURVEY.md §3, §7 step 4).
   *
   * Per round (given palette size k):
-  *   1. gather used neighbor colors — `edges ⋈ colors` + `collect_set`
-  *      (the reference's broadcast color probe O10/O11, kept fully
-  *      distributed: no `collectAsMap` on the driver, SURVEY.md §7 risk 5);
-  *   2. first-fit candidate — the custom codegen expression
-  *      `graft_first_fit(used, k)` ([[graft.functions.FirstFitColor]];
+  *   1. first-fit candidate — map-side from the vertex's used-color mask,
+  *      W = ceil(k/64) long words carried in the state ([[maskFirstFit]];
   *      O13, `coloring_optimized.py:150-166`; -3 ⇒ infeasible ⇒ the
   *      k-attempt fails, `coloring.py:104-108`);
-  *   3. same-color conflict resolution between adjacent candidates
-  *      (O15-O17) via one of two strategies below;
-  *   4. apply the admitted colors — left join + `coalesce`
-  *      (O20, `coloring.py:121-127`).
+  *   2. same-color conflict resolution between adjacent candidates
+  *      (O15-O17) by Jones–Plassmann priority (see [[Strategy.Jp]]);
+  *   3. apply the admitted colors — left join + `coalesce`
+  *      (O20, `coloring.py:121-127`) — and push them into the neighbors'
+  *      masks (the reference's color probe O10/O11 as a delta, kept fully
+  *      distributed: no `collectAsMap` on the driver, SURVEY.md §7 risk 5).
   *
   * Strategies:
-  *   - [[Strategy.Jp]] (default): Jones–Plassmann-style priority admit — a
-  *     node keeps its candidate iff no *adjacent* node competing for the
-  *     same candidate has higher (degree, id desc-asc) priority. Pure joins,
+  *   - [[Strategy.Jp]] (default): the DataFrame rounds above. A node keeps
+  *     its candidate iff no *adjacent* node competing for the same
+  *     candidate has higher (degree, id desc-asc) priority. Pure joins,
   *     **deterministic under any partitioning**, guaranteed progress (every
   *     conflict component admits its max-priority node), and the natural
   *     100 TB formulation: one edges-shuffle per round, no per-node adjacency
   *     arrays shuffled around.
-  *   - [[Strategy.GreedyAgg]]: the reference-shaped two-phase greedy
-  *     independent set as a custom [[GreedyIS]] `Aggregator` over color
-  *     buckets (`aggregateByKey`, `coloring_optimized.py:120-126`) —
-  *     capability parity with the reference's map-side-combine design;
-  *     admits more nodes per round on dense buckets, at the cost of
-  *     shuffling each candidate's adjacency list.
+  *   - [[Strategy.GreedyRdd]]: the reference-shaped two-phase greedy
+  *     independent set per color bucket (`aggregateByKey`,
+  *     `coloring_optimized.py:120-126`), run by [[GreedyRddKernel]]; k > 64
+  *     or oversized buckets route to Jp ([[resolveStrategy]]).
+  *   - [[Strategy.GraphX]]: the Jp semantics as `aggregateMessages` rounds,
+  *     run by [[GraphXKernel]].
   *
   * Driver-side control flow stays a plain Scala loop — same stance as GraphX
   * `Pregel` (SURVEY.md §4): only counts cross to the driver. Lineage growth
@@ -46,13 +45,10 @@ object ColoringKernel {
   sealed trait Strategy
   object Strategy {
     case object Jp extends Strategy
-    case object GreedyAgg extends Strategy
-    /** Delegate rounds to [[GreedyRddKernel]] — the same GreedyIS admit
-      * semantics as GreedyAgg (shared partial/merge logic), executed as a
-      * raw `aggregateByKey` loop over co-partitioned RDDs: lowest per-round
-      * fixed cost for the reference-shaped strategy (~0.35 s vs ~1.5 s per
-      * round at sf0.1). Mask path only — k > 64 falls back to the
-      * GreedyAgg DataFrame rounds (legacy collect_set regather). */
+    /** Delegate rounds to [[GreedyRddKernel]] — the [[GreedyIS]]
+      * partial/merge admit executed as a raw `aggregateByKey` loop over
+      * co-partitioned RDDs (~0.35 s vs ~1.5 s per round for DataFrame
+      * rounds at sf0.1). 64-bit mask only — k > 64 routes to Jp. */
     case object GreedyRdd extends Strategy
     /** Delegate rounds to [[GraphXKernel]] (aggregateMessages message
       * passing). Same speculative first-fit + priority-admit semantics;
@@ -68,15 +64,15 @@ object ColoringKernel {
     * Between checkpoints the state is only cached, so at cluster scale a
     * lost cached partition recomputes through the uncached lineage — the
     * cadence bounds that recompute depth to < CheckpointEvery rounds
-    * instead of all the way back to round 0. Deterministic strategies only:
-    * GreedyAgg checkpoints every round (see the loop comment). */
+    * instead of all the way back to round 0 — safe because the Jp rounds
+    * are deterministic, so a recompute reproduces the committed state. */
   private val CheckpointEvery = 4
 
   /** Distinct vertices of a symmetric edge list. */
   private def verticesOf(edges: DataFrame): DataFrame =
     edges.select(col("src").as("id")).distinct()
 
-  /** Expected-rows-per-color-bucket bound for the greedy strategies. The
+  /** Expected-rows-per-color-bucket bound for the greedy strategy. The
     * GreedyIS admit reduces each color bucket in ONE reducer — the merge is
     * inherently serial per bucket (the reference's own aggregateByKey
     * shape), so the scale ceiling is ~V/k rows through a single task.
@@ -95,10 +91,11 @@ object ColoringKernel {
   val GreedyMaxBucketRowsKey = "graft.greedy.maxBucketRows"
   val DefaultGreedyMaxBucketRows: Long = 8192L
 
-  /** Route a greedy request to the deterministic Jp strategy when the
-    * expected per-bucket size V/k exceeds the configured bound — the
-    * documented skew ceiling of the ≤k-key reduce, enforced in code rather
-    * than by caller choice. Two-tier size signal: the free Catalyst
+  /** Route a greedy request to the deterministic Jp strategy when
+    * [[GreedyRddKernel]] cannot take it: a palette wider than its 64-bit
+    * mask (k > 64), or an expected per-bucket size V/k past the configured
+    * bound — the documented skew ceiling of the ≤k-key reduce, enforced in
+    * code rather than by caller choice. Two-tier size signal: the free Catalyst
     * estimate (E rows upper-bound V at ~24 B per (src,dst) UnsafeRow)
     * decides when it can; only when it reads "too big" — including the
     * unknown-stats Long.Max default of RDD-backed inputs — is an exact
@@ -106,7 +103,8 @@ object ColoringKernel {
   private[graft] def resolveStrategy(
       spark: SparkSession, edges: DataFrame, requested: Strategy, k: Int): Strategy =
     requested match {
-      case Strategy.GreedyRdd | Strategy.GreedyAgg =>
+      case Strategy.GreedyRdd if k > 64 => Strategy.Jp
+      case Strategy.GreedyRdd =>
         val maxBucket = spark.conf
           .get(GreedyMaxBucketRowsKey, DefaultGreedyMaxBucketRows.toString).toLong
         val kk = math.max(k, 1).toLong
@@ -142,28 +140,23 @@ object ColoringKernel {
       return result.map(df => Colored(
         materialize(spark, appendIsolated(df, extraVertices)), k, rounds = -1))
     }
-    // Greedy's serial-per-bucket merge bound: auto-route oversized runs to
-    // the deterministic Jp strategy (resolveStrategy scaladoc) instead of
-    // leaving the scale ceiling to caller discipline.
-    val effective = resolveStrategy(spark, edges, strategy, k)
-    if (effective == Strategy.GreedyRdd && k <= 64) {
+    // Greedy's mask width and serial-per-bucket merge bound: auto-route
+    // oversized runs to the deterministic Jp strategy (resolveStrategy
+    // scaladoc) instead of leaving the ceilings to caller discipline.
+    if (resolveStrategy(spark, edges, strategy, k) == Strategy.GreedyRdd) {
       return GreedyRddKernel.tryColor(spark, edges, k, maxRounds)
         .map { case (df, rounds) => Colored(
           materialize(spark, appendIsolated(df, extraVertices)), k, rounds) }
     }
-    // GreedyRdd past the mask limit = the GreedyAgg rounds (legacy regather).
-    val strat = if (effective == Strategy.GreedyRdd) Strategy.GreedyAgg else effective
 
-    graft.functions.GraftFunctions.register(spark)
     val e = edges.persist(StorageLevel.MEMORY_AND_DISK)
     // Degree once, carried in the state so rounds don't re-join it (O8/O23).
     val degree = e.groupBy(col("src")).agg(count(lit(1)).cast("int").as("deg"))
 
-    // k ≤ 64 ⇒ the per-vertex used-color set rides the state as a 64-bit
-    // mask, updated incrementally from each round's newly-colored delta
-    // (see maskRound scaladoc); larger palettes fall back to the per-round
-    // full regather with collect_set arrays.
-    val useMask = k <= 64
+    // The per-vertex used-color set rides the state as W = ceil(k/64)
+    // 64-bit mask words, updated incrementally from each round's
+    // newly-colored delta (see applyWithMask scaladoc).
+    val words = math.max(1, (k + 63) / 64)
 
     // O6 init: isolated vertices → color 0, everything else -1
     // (changeColorFirstIteration, coloring.py:12-17).
@@ -172,16 +165,8 @@ object ColoringKernel {
       .map(_.select(col("id")).except(verticesOf(e)).withColumn("color", lit(0)))
     var state = materialize(spark, isolated.fold(connected)(connected.unionByName(_))
       .join(degree, col("id") === col("src"), "left_outer")
-      .select(col("id"), col("color"), coalesce(col("deg"), lit(0)).as("deg"),
-        lit(0L).as("used")))
-
-    // Adjacency lists (GreedyAgg only): static across rounds, materialized
-    // once on first use.
-    lazy val adjCached = e.groupBy(col("src"))
-      .agg(collect_list(col("dst")).as("nbrs"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var adjUsed = false
-    def adjacency(): DataFrame = { adjUsed = true; adjCached }
+      .select(Seq(col("id"), col("color"), coalesce(col("deg"), lit(0)).as("deg")) ++
+        (0 until words).map(w => lit(0L).as(usedCol(w))): _*))
 
     var rounds = 0
     var uncolored = state.filter(col("color") === -1).count()
@@ -189,24 +174,12 @@ object ColoringKernel {
     // Persisted handle backing `state` (the wrapper itself is not persisted).
     var stateCache: DataFrame = null
 
-    val debug = sys.env.contains("GRAFT_DEBUG_ROUNDS")
     while (uncolored > 0 && !failed) {
-      val tRound = System.nanoTime()
       rounds += 1
       if (rounds > maxRounds) { failed = true }
       else {
         val roundCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        val next = strat match {
-          case Strategy.Jp =>
-            if (useMask) jpRoundMask(e, state, k, roundCaches, uncolored)
-            else jpRound(e, state, k)
-          case Strategy.GreedyAgg =>
-            if (useMask) greedyRoundMask(spark, e, adjacency(), state, k,
-              roundCaches, uncolored)
-            else greedyRound(spark, e, adjacency(), state, k, roundCaches)
-          case Strategy.GraphX | Strategy.GreedyRdd =>
-            sys.error("delegating strategies handled above")
-        }
+        val next = jpRound(e, state, k, words, roundCaches, uncolored)
         // The round's ONE aggregate action reads progress + feasibility
         // together (-3 is the reference's infeasible sentinel,
         // coloring.py:53-54) and doubles as the cache materialization: the
@@ -216,37 +189,27 @@ object ColoringKernel {
         // per-round lineage AND resets Catalyst stats (see materialize
         // scaladoc) without the separate localCheckpoint job an eager
         // checkpoint per round would cost.
-        val tStats = System.nanoTime()
         val persisted = next.persist(StorageLevel.MEMORY_AND_DISK)
         val stats = persisted.agg(
           sum(when(col("color") === -1, 1).otherwise(0)),
           sum(when(col("color") === -3, 1).otherwise(0))).head()
-        if (debug) println(f"[kernel]   stats ${(System.nanoTime() - tStats) / 1e9}%.2f s")
         val nextUncolored = stats.getLong(0)
         val infeasible = stats.getLong(1)
         if (infeasible > 0) failed = true
         else if (nextUncolored >= uncolored) {
           // No progress. Jp always colors the top-priority node of every
-          // uncolored component; GreedyAgg admits at least the first-
-          // arriving candidate of every nonempty bucket (GreedyIS scaladoc
-          // — its arrival-order partial phase can prune even the bucket's
-          // top node, but never all of them). Either way a round with
-          // uncolored candidates commits ≥1 color, so this only fires as
-          // the bounded-round backstop (risk 6).
+          // uncolored component, so a round with uncolored candidates
+          // commits ≥1 color; this only fires as the bounded-round
+          // backstop (risk 6).
           failed = rounds >= maxRounds
         }
         roundCaches.foreach(_.unpersist())
         if (stateCache != null) stateCache.unpersist()
         state.unpersist()
-        // Checkpoint policy: GreedyAgg's admitted sets are partitioning-
-        // dependent (reference-faithful), so recomputing a lost cached
-        // partition could silently commit a coloring inconsistent with the
-        // stats already read — an eager local checkpoint EVERY round makes
-        // block loss fail loudly instead of diverge. The deterministic Jp
-        // rounds are recompute-safe, so they keep the cheap persist-backed
-        // wrapper and checkpoint only every CheckpointEvery rounds to bound
-        // the recompute depth.
-        if (strat == Strategy.GreedyAgg || rounds % CheckpointEvery == 0) {
+        // Checkpoint policy: the deterministic rounds are recompute-safe, so
+        // they keep the cheap persist-backed wrapper and checkpoint only
+        // every CheckpointEvery rounds to bound the recompute depth.
+        if (rounds % CheckpointEvery == 0) {
           state = materialize(spark, persisted)
           persisted.unpersist()
           stateCache = null
@@ -259,12 +222,9 @@ object ColoringKernel {
             persisted.schema)
         }
         uncolored = nextUncolored
-        if (debug) println(f"[kernel] round=$rounds uncolored=$uncolored " +
-          f"t=${(System.nanoTime() - tRound) / 1e9}%.2f s")
       }
     }
 
-    if (adjUsed) adjCached.unpersist()
     e.unpersist()
     if (failed) {
       state.unpersist()
@@ -313,14 +273,28 @@ object ColoringKernel {
   private def prio(idCol: Column, degCol: Column): Column =
     struct(degCol.as("d"), (-idCol).as("ni"))
 
-  /** First-fit over a 64-bit used-color mask, entirely from codegen'd
-    * builtins: lowbit(~m) isolates the smallest free color,
-    * `bit_count(lowbit−1)` is its index, ≥ k ⇒ the −3 infeasible sentinel
-    * (when all 64 bits are taken, lowbit = 0 and bit_count(−1) = 64 ≥ k).
-    * No join, no array allocation — the whole candidate step is map-side. */
-  private def maskFirstFit(used: Column, k: Int): Column = {
-    val free = bitwise_not(used)
-    val idx = bit_count(free.bitwiseAND(-free) - 1)
+  /** State column of used-mask word `w`: colors [64·w, 64·w + 64). */
+  private def usedCol(w: Int): String = s"used$w"
+
+  /** First-fit over the W-word used-color mask, entirely from codegen'd
+    * builtins: in word w, lowbit(~m) isolates the smallest free color and
+    * `bit_count(lowbit−1)` + 64·w is its index; the lowest word with a free
+    * bit decides. Index ≥ k ⇒ the −3 infeasible sentinel (when every word
+    * is full, the last word's lowbit = 0 and bit_count(−1) = 64 puts the
+    * index at 64·W ≥ k). No join, no array allocation — the whole candidate
+    * step is map-side. A word whose only free bit is bit 63 leaves
+    * free = Long.MinValue, which ANSI arithmetic cannot negate; that case is
+    * answered directly. */
+  private def maskFirstFit(words: Int, k: Int): Column = {
+    val perWord = (0 until words).map { w =>
+      val free = bitwise_not(col(usedCol(w)))
+      val idx = when(free === Long.MinValue, lit(63))
+        .otherwise(bit_count(free.bitwiseAND(-free) - 1))
+      (free, idx + 64 * w)
+    }
+    val idx = perWord.init.foldRight(perWord.last._2) { case ((free, i), rest) =>
+      when(free =!= 0L, i).otherwise(rest)
+    }
     when(idx < k, idx.cast("int")).otherwise(lit(-3))
   }
 
@@ -334,9 +308,15 @@ object ColoringKernel {
     * vertices left. `updates` is (uid, new_color) and must be persisted by
     * the caller (referenced by both the apply join and the delta). */
   private def applyWithMask(e: DataFrame, state: DataFrame, updates: DataFrame,
-      updBound: Long): DataFrame = {
+      words: Int, updBound: Long): DataFrame = {
     val delta = updates.filter(col("new_color") >= 0)
       .select(col("uid").as("nid"), col("new_color").as("ncolor"))
+    // `1L << c` wraps at 64 (the shift count is taken mod 64), so each
+    // word ORs only the colors of its own range.
+    val bit = call_function("shiftleft", lit(1L), col("ncolor"))
+    val gains = (0 until words).map { w =>
+      bit_or(when(shiftright(col("ncolor"), 6) === w, bit)).as(s"gained$w")
+    }
     // Row-bound broadcast (the exact uncolored count): AQE's byte
     // threshold flips this probe to an E-shuffling SMJ right around the
     // 10× leg's state size (measured: the minimal-colors run's shuffle
@@ -346,30 +326,36 @@ object ColoringKernel {
     val gained = e.join(graft.ops.Broadcasts.maybeBroadcast(delta, updBound),
         col("dst") === col("nid"))
       .groupBy(col("src"))
-      .agg(bit_or(call_function("shiftleft", lit(1L), col("ncolor"))).as("gained"))
+      .agg(gains.head, gains.tail: _*)
     // Color changes and mask gains are both tiny relative to the state —
     // merge them first (small ⟗ small) so the V-sized state is shuffled
     // through ONE join per round, not two.
     val chg = updates.select(col("uid").as("cid"), col("new_color"))
-      .join(gained.select(col("src").as("cid"), col("gained")), Seq("cid"), "full_outer")
+      .join(gained.withColumnRenamed("src", "cid"), Seq("cid"), "full_outer")
     state.join(graft.ops.Broadcasts.maybeBroadcast(chg, 2L * updBound),
         col("id") === col("cid"), "left_outer")
-      .select(col("id"),
+      .select(Seq(col("id"),
         coalesce(col("new_color"), col("color")).cast("int").as("color"),
-        col("deg"),
-        col("used").bitwiseOR(coalesce(col("gained"), lit(0L))).as("used"))
+        col("deg")) ++ (0 until words).map(w => col(usedCol(w))
+          .bitwiseOR(coalesce(col(s"gained$w"), lit(0L))).as(usedCol(w))): _*)
   }
 
-  /** Mask-state speculative round (k ≤ 64): candidates fall out of the
-    * carried mask map-side; only the rival check still touches the edge
-    * list, and the used-mask update is delta-driven ([[applyWithMask]]).
-    * Semantics identical to [[jpRound]] — colors are permanent, so the
-    * incrementally-grown mask always equals the regathered set. */
-  private def jpRoundMask(e: DataFrame, state: DataFrame, k: Int,
+  /** One speculative-coloring round: every uncolored vertex picks its
+    * first-fit candidate from the carried mask, map-side (O13), then keeps
+    * it iff no adjacent vertex chose the same candidate with higher
+    * (degree, id) priority; only this rival check touches the edge list,
+    * and the used-mask update is delta-driven ([[applyWithMask]]). Converges
+    * in ~O(chromatic) rounds (measured 13 rounds on the sf0.1 kernel graph
+    * vs 78+ for classic local-maximum Jones–Plassmann, which serializes on
+    * priority chains). Correctness: same-candidate adjacent vertices are
+    * totally ordered, only the maximum keeps the color, so no conflict can
+    * commit; every conflict component commits its top vertex, so progress
+    * is guaranteed. No free color in [0,k) → the -3 infeasible sentinel. */
+  private def jpRound(e: DataFrame, state: DataFrame, k: Int, words: Int,
       roundCaches: scala.collection.mutable.ArrayBuffer[DataFrame],
       uncolored: Long): DataFrame = {
     val cand = state.filter(col("color") === -1)
-      .select(col("id"), col("deg"), maskFirstFit(col("used"), k).as("cand"))
+      .select(col("id"), col("deg"), maskFirstFit(words, k).as("cand"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     roundCaches += cand
     // Candidate sides carry exactly `uncolored` rows — row-bound broadcast
@@ -397,142 +383,7 @@ object ColoringKernel {
       .filter(col("new_color") =!= -1)
       .persist(StorageLevel.MEMORY_AND_DISK)
     roundCaches += updates
-    applyWithMask(e, state, updates, uncolored)
-  }
-
-  /** Mask-state greedy round (k ≤ 64): same GreedyIS Aggregator admit as
-    * [[greedyRound]], candidates and used-mask maintenance as in
-    * [[jpRoundMask]]. */
-  private def greedyRoundMask(spark: SparkSession, e: DataFrame, adj: DataFrame,
-      state: DataFrame, k: Int,
-      roundCaches: scala.collection.mutable.ArrayBuffer[DataFrame],
-      uncolored: Long): DataFrame = {
-    val cand = state.filter(col("color") === -1)
-      .select(col("id"), col("deg"), maskFirstFit(col("used"), k).as("cand"))
-    val updates = admitGreedy(spark, adj, cand)
-      .select(col("id").as("uid"), col("cand").as("new_color"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    roundCaches += updates
-    applyWithMask(e, state, updates, uncolored)
-  }
-
-  /** One speculative-coloring round (the default strategy): every uncolored
-    * vertex picks its first-fit candidate (O13), then keeps it iff no
-    * adjacent vertex chose the same candidate with higher (degree, id)
-    * priority. Two edges passes — candidate gather + rival check — converge
-    * in ~O(chromatic) rounds (measured 13 rounds on the sf0.1 kernel graph
-    * vs 78+ for classic local-maximum Jones–Plassmann, which serializes on
-    * priority chains). Correctness: same-candidate adjacent vertices are
-    * totally ordered, only the maximum keeps the color, so no conflict can
-    * commit; every conflict component commits its top vertex, so progress
-    * is guaranteed. No free color in [0,k) → the -3 infeasible sentinel. */
-  private def jpRound(e: DataFrame, state: DataFrame, k: Int): DataFrame = {
-    // Pass A: first-fit candidate per uncolored vertex.
-    val used = e
-      .join(state.filter(col("color") >= 0)
-        .select(col("id").as("nid"), col("color").as("ncolor")),
-        col("dst") === col("nid"))
-      .groupBy(col("src"))
-      .agg(collect_set(col("ncolor")).as("used_arr"))
-    // Materialized: Pass B references the candidate set three times (both
-    // join sides + the final apply); without this the edges pass behind it
-    // re-runs per reference (measured 13 s vs 2 s per round at sf0.1).
-    // materialize() also resets stats — see its scaladoc.
-    // Custom codegen expression (graft.functions.FirstFitColor): one
-    // boolean[k] pass, no intermediate arrays; NULL used → 0, full → -3.
-    val cand = state.filter(col("color") === -1)
-      .join(used, col("id") === col("src"), "left_outer")
-      .select(col("id"), col("deg"),
-        call_function("graft_first_fit", col("used_arr"), lit(k)).as("cand"))
-    val candM = materialize(e.sparkSession, cand)
-
-    // Pass B: highest rival priority per vertex among same-candidate
-    // neighbors; keep the candidate iff we beat every rival.
-    val candA = candM.select(col("id").as("a_id"), col("cand").as("a_cand"),
-      col("deg").as("a_deg"))
-    val candB = candM.select(col("id").as("b_id"), col("cand").as("b_cand"),
-      col("deg").as("b_deg"))
-    val rival = e
-      .join(candA, col("src") === col("a_id"))
-      .join(candB, col("dst") === col("b_id"))
-      .filter(col("a_cand") >= 0 && col("a_cand") === col("b_cand"))
-      .groupBy(col("a_id"))
-      .agg(max(prio(col("b_id"), col("b_deg"))).as("rival"))
-    val updates = candM
-      .join(rival, col("id") === col("a_id"), "left_outer")
-      .select(col("id").as("uid"),
-        when(col("cand") === -3, lit(-3))
-          .when(col("rival").isNull || prio(col("id"), col("deg")) > col("rival"),
-            col("cand"))
-          .otherwise(lit(-1)).as("new_color"))
-
-    state.join(updates, col("id") === col("uid"), "left_outer")
-      .select(col("id"),
-        coalesce(col("new_color"), col("color")).cast("int").as("color"),
-        col("deg"), col("used"))
-  }
-
-  /** One reference-shaped round: gather used neighbor colors (O11),
-    * first-fit candidates (O13), greedy-IS conflict resolution per color
-    * bucket via the custom [[GreedyIS]] Aggregator (O17), left-join apply
-    * (O20). */
-  private def greedyRound(spark: SparkSession, e: DataFrame, adj: DataFrame,
-      state: DataFrame, k: Int,
-      roundCaches: scala.collection.mutable.ArrayBuffer[DataFrame]): DataFrame = {
-    val used = e
-      .join(state.filter(col("color") >= 0)
-        .select(col("id").as("nid"), col("color").as("ncolor")),
-        col("dst") === col("nid"))
-      .groupBy(col("src"))
-      .agg(collect_set(col("ncolor")).as("used_arr"))
-    // Lazily persisted, not eagerly checkpointed: `cand` is referenced by
-    // both the admit path and the infeasible-null path, so the cache stops
-    // the used-join running twice — but the round's single stats action is
-    // what first populates it (an eager localCheckpoint here was a second
-    // full action per round, ~25% of q_color_greedy's wall-clock). Stats
-    // blowup isn't a risk for this round-local plan (the per-round state
-    // wrapper in the main loop resets stats). Unpersisted by the caller
-    // after the stats action.
-    val cand = state.filter(col("color") === -1)
-      .join(used, col("id") === col("src"), "left_outer")
-      .select(col("id"), col("deg"),
-        call_function("graft_first_fit", col("used_arr"), lit(k)).as("cand"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    roundCaches += cand
-    val admitted = admitGreedy(spark, adj, cand.filter(col("cand").isNotNull))
-    val updates = admitted
-      .unionByName(cand.filter(col("cand").isNull)
-        .select(col("id"), lit(-3).as("cand")))
-    state
-      .join(updates.withColumnRenamed("id", "aid"), col("id") === col("aid"), "left_outer")
-      .select(col("id"),
-        coalesce(col("cand"), col("color")).cast("int").as("color"),
-        col("deg"), col("used"))
-  }
-
-  /** Bucket candidates by color and run the [[GreedyIS]] Aggregator
-    * (partial per-partition greedy + sorted-merge greedy — the
-    * `aggregateByKey` design, `coloring_optimized.py:120-126`). Requires
-    * each candidate's adjacency list in the bucket (the optimized reference
-    * ships the same projected record, `coloring_optimized.py:86-90`). */
-  private def admitGreedy(
-      spark: SparkSession, adj: DataFrame, cand: DataFrame): DataFrame = {
-    import spark.implicits._
-    // Encode (cand, CandNode) directly as a struct column — no extra typed
-    // map stage between the join and the aggregation.
-    val bucket = cand
-      .join(adj, col("id") === adj("src"), "left_outer").drop(adj("src"))
-      .select(col("cand"), struct(
-        col("id"),
-        col("deg").as("degree"),
-        coalesce(col("nbrs"), array().cast("array<long>")).as("nbrs")).as("node"))
-      .as[(Int, CandNode)]
-    bucket
-      .groupByKey(_._1)
-      .mapValues(_._2)
-      .agg(GreedyIS.toColumn.name("admitted"))
-      .flatMap { case (c, ids) => ids.map(id => (id, c)) }
-      .toDF("id", "cand")
+    applyWithMask(e, state, updates, words, uncolored)
   }
 
   /** Outer minimal-color search (O25, `coloring.py:212-231`), with the
@@ -556,7 +407,7 @@ object ColoringKernel {
     * already witnesses the kernel's minimal k (measured: 40 s → 14 s for
     * q_minimal_colors at sf0.1 — the k−1 probe replayed all 13 rounds with
     * bit-identical uncolored counts before failing on the last one).
-    * GreedyAgg keeps the descending search: its admitted sets depend on
+    * GreedyRdd keeps the descending search: its admitted sets depend on
     * partitioning (reference-faithful), so no single trace is a proof.
     */
   def minimalColors(

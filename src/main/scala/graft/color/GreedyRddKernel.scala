@@ -11,7 +11,7 @@ import org.apache.spark.storage.StorageLevel
   * the uncolored candidates by their first-fit color and admit a greedy
   * independent set per bucket with map-side partial combine
   * (`aggregateByKey`, `coloring_optimized.py:120-126`; the partial/merge
-  * logic is shared with the Dataset path via [[GreedyIS]]).
+  * logic is [[GreedyIS]]).
   *
   * Why an RDD formulation exists next to [[ColoringKernel]]'s DataFrame
   * rounds: an iterative kernel's per-round cost at a fixed graph size is
@@ -41,14 +41,12 @@ import org.apache.spark.storage.StorageLevel
   * (reference-faithful: the partial greedy prunes before the merge sees
   * everything) a lost cached partition must fail loudly rather than
   * recompute, because a recompute could silently admit a set inconsistent
-  * with the stats already committed (same policy as the DF path's
-  * every-round checkpoint, ColoringKernel round loop).
+  * with the stats already committed.
   *
   * k ≤ 64 only (used colors ride a 64-bit mask updated from each round's
   * newly-colored delta — O(E) total gather across ALL rounds, see
-  * `ColoringKernel.applyWithMask`); larger palettes take the DF kernel's
-  * legacy collect_set path ([[ColoringKernel.tryColor]] delegates here only
-  * when the mask fits).
+  * `ColoringKernel.applyWithMask`); larger palettes route to the Jp rounds
+  * ([[ColoringKernel.resolveStrategy]]).
   */
 object GreedyRddKernel {
 
@@ -100,7 +98,7 @@ object GreedyRddKernel {
     * expected bucket size V/k exceeds `maxBucketRows` (the same serial-merge
     * ceiling [[ColoringKernel.resolveStrategy]] guards — here checked with
     * the EXACT V), or on a genuine stall past `maxRounds`; the caller falls
-    * back to the legacy route through the kernel's strategy auto-router. */
+    * back to the Jp rounds. */
   def colorDeltaPlusOne(
       spark: SparkSession,
       edgesDf: DataFrame,
@@ -118,7 +116,6 @@ object GreedyRddKernel {
       maxBucketRows: Long): Option[(DataFrame, Int, Int)] = {
     import spark.implicits._
 
-    val debug = sys.env.contains("GRAFT_DEBUG_ROUNDS")
     // InternalRow extraction instead of the Dataset tuple encoder: the
     // kernel only needs two primitive longs per row, and the encoder's
     // deserializer projection was measurable against a 32-thread local
@@ -158,7 +155,6 @@ object GreedyRddKernel {
       (a, kv) => (a._1 + 1L, math.max(a._2, kv._2.length)),
       (a, b) => (a._1 + b._1, math.max(a._2, b._2)))
     val k = fixedK.getOrElse(maxDeg + 1)
-    if (debug) println(s"[greedy-rdd] nParts=$nParts v=$v k=$k")
     if (fixedK.isEmpty && (k > 64 || v / math.max(k, 1) > maxBucketRows)) {
       // Palette wider than the mask, or the serial-merge bucket ceiling:
       // reject before any round so the caller reroutes.
@@ -195,7 +191,6 @@ object GreedyRddKernel {
         // contract; every output remains a valid coloring, infeasible
         // vertices still surface as −3). An executor task, NOT a driver
         // collect — memory is bounded by Σ deg(tail) ≤ tailRows · Δ.
-        val tRound = System.nanoTime()
         val solved: RDD[(Long, Int)] = state
           .filter(_._2.color == -1)
           .join(adj)
@@ -242,11 +237,8 @@ object GreedyRddKernel {
         state = next
         if (inf > 0) failed = true
         uncolored = nextUncolored
-        if (debug) println(f"[greedy-rdd] k=$k round=$rounds (tail-local) " +
-          f"uncolored=$uncolored t=${(System.nanoTime() - tRound) / 1e9}%.2f s")
       }
       else {
-        val tRound = System.nanoTime()
         // First-fit candidate map-side from the carried mask (O13).
         val cand = state
           .filter(_._2.color == -1)
@@ -261,8 +253,8 @@ object GreedyRddKernel {
           .filter(_._2._1 >= 0)
           .join(adj)
           .map { case (id, ((c, deg), nbrs)) => (c, CandNode(id, deg, nbrs)) }
-          .aggregateByKey(Vector.empty[CandNode]: Seq[CandNode],
-            math.min(k, nParts))(GreedyIS.reduce, GreedyIS.merge)
+          .aggregateByKey(GreedyIS.zero, math.min(k, nParts))(
+            GreedyIS.reduce, GreedyIS.merge)
           .flatMap { case (c, seq) => seq.map(n => (n.id, c)) }
         val infeasible = cand.filter(_._2._1 == -3).map { case (id, _) => (id, -3) }
         val updates = (admitted ++ infeasible).partitionBy(part)
@@ -299,8 +291,6 @@ object GreedyRddKernel {
         else if (nextUncolored >= uncolored) failed = rounds >= maxRounds
         uncolored = nextUncolored
         uncoloredDeg = nextDeg
-        if (debug) println(f"[greedy-rdd] k=$k round=$rounds uncolored=$uncolored " +
-          f"t=${(System.nanoTime() - tRound) / 1e9}%.2f s")
       }
     }
 

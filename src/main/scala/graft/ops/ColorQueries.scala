@@ -41,31 +41,24 @@ object ColorQueries {
 
   private def deltaPlusOneTrace(spark: SparkSession, d: String): ColoringKernel.Colored =
     deltaTraceCache.getOrElseUpdate(spark, d)({
-      val debug = sys.env.contains("GRAFT_DEBUG_ROUNDS")
-      def timed[T](label: String)(f: => T): T = {
-        val t0 = System.nanoTime()
-        val r = f
-        if (debug) println(f"[trace] $label t=${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
       val (edges, nEdges) = GraphOps.kernelEdgesWithCount(spark, d)
       val graphxMax = spark.conf
         .get(GraphxMaxEdgesKey, DefaultGraphxMaxEdges.toString).toLong
       if (nEdges <= graphxMax) {
-        val base = timed("kernelBase")(kernelBase(spark, d))
-        val k = timed("maxDegree")(GraphXKernel.maxDegree(base) + 1)
-        timed("tryColor")(ColoringKernel
+        val base = kernelBase(spark, d)
+        val k = GraphXKernel.maxDegree(base) + 1
+        ColoringKernel
           .tryColor(spark, edges, k, Strategy.GraphX, preparedBase = Some(base))
-          .getOrElse(sys.error("Δ+1 coloring cannot fail")))
+          .getOrElse(sys.error("Δ+1 coloring cannot fail"))
       } else {
         // Past the crossover: Δ from a one-pass degree agg (no GraphX base
         // build), then the DataFrame Jp rounds.
-        val k = timed("maxDegree")(edges
+        val k = edges
           .groupBy(col("src")).agg(count(lit(1)).as("deg"))
-          .agg(coalesce(max(col("deg")), lit(0L))).head().getLong(0).toInt + 1)
-        timed("tryColor")(ColoringKernel
+          .agg(coalesce(max(col("deg")), lit(0L))).head().getLong(0).toInt + 1
+        ColoringKernel
           .tryColor(spark, edges, k, Strategy.Jp)
-          .getOrElse(sys.error("Δ+1 coloring cannot fail")))
+          .getOrElse(sys.error("Δ+1 coloring cannot fail"))
       }
     })
 
@@ -83,38 +76,31 @@ object ColorQueries {
   /** Reference-shaped variant: same kernel driven by the GreedyIS
     * partial/merge admit (the aggregateByKey design), executed as the
     * co-partitioned RDD round loop ([[graft.color.GreedyRddKernel]] — the
-    * literal `aggregateByKey` with map-side combine; the Dataset
-    * `Aggregator` path stays spec-covered under Strategy.GreedyAgg).
+    * literal `aggregateByKey` with map-side combine).
     * Output restricted to the validation invariants so the nondeterministic
     * admitted sets (reference-faithful) don't break result hashing. */
   def qColorGreedy(spark: SparkSession, d: String): DataFrame = {
-    val debug = sys.env.contains("GRAFT_DEBUG_ROUNDS")
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (debug) println(f"[greedy-q] $label t=${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-    val (edges, eCount) = timed("edges-memo")(GraphOps.kernelEdgesWithCount(spark, d))
+    val (edges, eCount) = GraphOps.kernelEdgesWithCount(spark, d)
     val maxBucket = spark.conf.get(
       ColoringKernel.GreedyMaxBucketRowsKey,
       ColoringKernel.DefaultGreedyMaxBucketRows.toString).toLong
     // Fast path: the kernel derives k = Δ+1 from its own adjacency (one
     // aggregate; no separate degree pass) and checks the mask / serial-
-    // bucket guards with the exact V. None → legacy route through the
-    // strategy auto-router (Jp at scale, GreedyAgg past the mask).
-    val (colors, rounds) = timed("fast-path")(graft.color.GreedyRddKernel
-      .colorDeltaPlusOne(spark, edges, eCount, maxBucket)) match {
+    // bucket guards with the exact V. None (palette past the 64-bit mask,
+    // bucket past the bound, or a stall past maxRounds) → the deterministic
+    // Jp rounds.
+    val (colors, rounds) = graft.color.GreedyRddKernel
+      .colorDeltaPlusOne(spark, edges, eCount, maxBucket) match {
       case Some((c, r, _)) => (c, r)
       case None =>
         val maxDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
           .agg(max(col("deg"))).head().getLong(0).toInt
         val r = ColoringKernel
-          .tryColor(spark, edges, maxDeg + 1, Strategy.GreedyRdd)
+          .tryColor(spark, edges, maxDeg + 1, Strategy.Jp)
           .getOrElse(sys.error("Δ+1 coloring cannot fail"))
         (r.colors, r.rounds)
     }
-    val (uncolored, conflicts) = timed("validate")(ColoringKernel.validate(edges, colors))
+    val (uncolored, conflicts) = ColoringKernel.validate(edges, colors)
     import spark.implicits._
     Seq((uncolored, conflicts, rounds.toLong > 0))
       .toDF("uncolored", "conflicts", "converged")
@@ -126,17 +112,10 @@ object ColorQueries {
     * the identical rounds and fails), so this reads the shared session
     * trace — minimal_k = distinct colors used — and revalidates it. */
   def qMinimalColors(spark: SparkSession, d: String): DataFrame = {
-    val debug = sys.env.contains("GRAFT_DEBUG_ROUNDS")
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (debug) println(f"[minimal] $label t=${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
     val edges = GraphOps.kernelEdges(spark, d)
-    val best = timed("trace")(deltaPlusOneTrace(spark, d))
-    val minimalK = timed("usedColors")(ColoringKernel.usedColors(best.colors))
-    val (uncolored, conflicts) = timed("validate")(ColoringKernel.validate(edges, best.colors))
+    val best = deltaPlusOneTrace(spark, d)
+    val minimalK = ColoringKernel.usedColors(best.colors)
+    val (uncolored, conflicts) = ColoringKernel.validate(edges, best.colors)
     import spark.implicits._
     Seq((minimalK.toLong, uncolored, conflicts))
       .toDF("minimal_k", "uncolored", "conflicts")

@@ -776,8 +776,6 @@ object GraphOps {
     var rounds = 0
     while (nNew > 0 && rounds < 64) {
       rounds += 1
-      if (sys.env.contains("GRAFT_DEBUG_ROUNDS"))
-        System.err.println(s"[truss] round $rounds: removedNew=$nNew allRemoved=$nAll")
       val remB = Broadcasts.maybeBroadcast(removedNew, nNew)
       def onEdge(t: DataFrame, edges: DataFrame, x: Column, y: Column,
           joinType: String): DataFrame =

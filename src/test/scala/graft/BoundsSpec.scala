@@ -114,7 +114,8 @@ class BoundsSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("64"))
     // The strategy router, not the caller, owns the fallback: a greedy
-    // REQUEST past the mask still colors via the DataFrame rounds.
+    // REQUEST past the mask routes to the Jp rounds, whose used mask spans
+    // ceil(k/64) words, and still colors.
     val r = ColoringKernel.tryColor(spark, e, 65, Strategy.GreedyRdd)
     assert(r.isDefined)
     r.foreach(_.colors.unpersist())

@@ -26,6 +26,11 @@ class CliSpec extends AnyFunSuite {
       "input" -> "/root/reference/graph.json", "output-coloring" -> out))
     assert(s.uncolored === 0 && s.conflicts === 0)
     assert(s.k <= 4) // the 10-node fixture colors in <= 4 (SURVEY.md §5)
+    // --strategy greedy: GreedyRdd rounds under the descending-k search.
+    val g = Coloring.run(spark, Map(
+      "input" -> "/root/reference/graph.json", "strategy" -> "greedy"))
+    assert(g.uncolored === 0 && g.conflicts === 0)
+    assert(g.k <= 4)
     // The sink is the reference's array-of-objects format: read it back as
     // multiline JSON and check one (id, color) row per input node.
     val coloring = spark.read.option("multiLine", value = true).json(out)

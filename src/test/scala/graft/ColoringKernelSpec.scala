@@ -11,7 +11,7 @@ import graft.model.{GraphIO, RandomGraph}
 /** Invariant-based tests for the iterative kernel (SURVEY.md §5): a valid
   * coloring has zero uncolored nodes, zero adjacent-equal-color pairs, and
   * uses ≤ Δ+1 colors; results are deterministic under a fixed seed. Plus
-  * GreedyIS Aggregator laws and format-parity IO on the reference fixture.
+  * GreedyIS partial/merge laws and format-parity IO on the reference fixture.
   */
 class ColoringKernelSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
@@ -28,18 +28,31 @@ class ColoringKernelSpec extends AnyFunSuite {
   }
 
   for (n <- Seq(10L, 200L, 2000L);
-       strat <- Seq(Strategy.Jp, Strategy.GreedyAgg, Strategy.GreedyRdd)) {
+       strat <- Seq(Strategy.Jp, Strategy.GreedyRdd)) {
     test(s"valid coloring: n=$n maxDeg=5 strategy=$strat") {
       check(RandomGraph.edges(spark, n, 5, seed = 42), 5, strat)
     }
   }
 
-  test("legacy collect_set path (k > 64) still colors validly") {
-    // k <= 64 rounds ride the 64-bit used mask; palettes past 64 fall back
-    // to the per-round regather with collect_set arrays — keep it covered.
-    for (strat <- Seq(Strategy.Jp, Strategy.GreedyAgg)) {
-      check(RandomGraph.edges(spark, 500L, 6, seed = 11), 70, strat)
+  test("multi-word used mask (k > 64): a 65-clique colors vertex i with i") {
+    // Colors 64.. live in the second mask word. Every degree is 64, so the
+    // lowest uncolored id wins each round and vertex i takes color i;
+    // vertex 64 finds word 0 full and takes the first bit of word 1. At
+    // k = 64 the single word is full for vertex 64: the −3 sentinel.
+    val n = 65L
+    val edges = (for (a <- 0L until n; b <- 0L until n if a != b) yield (a, b))
+      .toDF("src", "dst")
+    // GreedyRdd's mask is one word, so the router hands k = 65 to Jp.
+    assert(ColoringKernel.resolveStrategy(spark, edges, Strategy.GreedyRdd, 65)
+      === Strategy.Jp)
+    for (strat <- Seq(Strategy.Jp, Strategy.GreedyRdd)) {
+      val r = ColoringKernel.tryColor(spark, edges, 65, strat)
+        .getOrElse(fail(s"k = 65 must color a 65-clique ($strat)"))
+      assert(r.colors.as[(Long, Int)].collect().toMap ===
+        (0L until n).map(i => i -> i.toInt).toMap)
+      r.colors.unpersist()
     }
+    assert(ColoringKernel.tryColor(spark, edges, 64, Strategy.Jp).isEmpty)
   }
 
   test("GreedyRdd distributed rounds stay valid with the tail-local solve off") {
@@ -66,13 +79,11 @@ class ColoringKernelSpec extends AnyFunSuite {
       === Strategy.GreedyRdd)
     assert(ColoringKernel.resolveStrategy(spark, edges, Strategy.Jp, 6)
       === Strategy.Jp)
-    // ...an injected tiny bound flips both greedy shapes to Jp, and an
-    // end-to-end greedy request still yields a valid coloring via Jp rounds.
+    // ...an injected tiny bound flips greedy to Jp, and an end-to-end
+    // greedy request still yields a valid coloring via Jp rounds.
     spark.conf.set(ColoringKernel.GreedyMaxBucketRowsKey, "1")
     try {
       assert(ColoringKernel.resolveStrategy(spark, edges, Strategy.GreedyRdd, 6)
-        === Strategy.Jp)
-      assert(ColoringKernel.resolveStrategy(spark, edges, Strategy.GreedyAgg, 6)
         === Strategy.Jp)
       check(edges, 5, Strategy.GreedyRdd)
     } finally spark.conf.unset(ColoringKernel.GreedyMaxBucketRowsKey)
